@@ -1,10 +1,9 @@
 """Diameter-independent FAST-BCC machinery: Borůvka forest + Euler tour.
 
-The level-sweep tagging in ``pasgal_spark.graph.bcc`` costs O(tree depth)
-supersteps — fine at web diameters (~650) but pathological on the
-reference's grid corpus (diameters 59k-102k,
-/root/reference/src/utils/diameter.tsv:8-9). This module re-derives the
-reference's own scale path (parallel Euler tour via list ranking,
+The tagging stages of ``pasgal_spark.graph.bcc``. A BFS-tree level sweep
+would cost O(tree depth) supersteps — pathological on the reference's
+grid corpus (diameters 59k-102k, src/utils/diameter.tsv:8-9). This module
+re-derives the reference's own scale path (parallel Euler tour via list ranking,
 /root/reference/src/BCC/fast-bcc.h:32-148, and sparse-table range-minmax,
 /root/reference/src/sparse_table.h:7-59) as DataFrame supersteps whose
 count is O(log n) regardless of diameter:
@@ -353,7 +352,7 @@ def boruvka_forest_cc(
                 return r
 
             chosen_keys = []
-            rpdf = rpdf.sort_values("key")
+            rpdf = rpdf.sort_values("key", kind="stable")
             for x, y, k in zip(
                 rpdf["x"].tolist(), rpdf["y"].tolist(), rpdf["key"].tolist()
             ):
@@ -871,8 +870,7 @@ def euler_bcc_tags(
     forest: DataFrame | None = None,
 ) -> DataFrame:
     """(id, parent, first, last, low, high): full FAST-BCC tag set with an
-    O(log n) superstep bound — the diameter-safe alternative to
-    ``bcc.tree_tags`` (drop-in for ``bcc.fence_filter``). Pass ``forest``
+    O(log n) superstep bound — the input of ``bcc.fence_filter``. Pass ``forest``
     when the caller already derived it (``boruvka_forest_cc``) to avoid a
     second contraction."""
     if forest is None:

@@ -28,8 +28,9 @@ Each kernel is the Spark-native re-expression of a reference algorithm
 Scale notes (100 TB framing): the edge table is the big, static relation —
 it is scanned once per superstep and never shuffled after the initial
 partitioning-by-src; only the small per-vertex state moves. Message combine
-is expressed as partial+final hash aggregation (map-side combine), with an
-optional explicit salting stage for hub keys (north_rule). Lineage is
+is expressed as partial+final hash aggregation (map-side combine), which
+already tames hub keys for algebraic aggregates (BASELINE.md measured an
+explicit salting stage ~3x slower). Lineage is
 truncated by eager localCheckpoint every ``checkpoint_every`` supersteps —
 on a cluster this would be a parquet/Iceberg checkpoint (see
 pasgal_spark.plans.checkpoints for the resumable variant).
@@ -37,7 +38,6 @@ pasgal_spark.plans.checkpoints for the resumable variant).
 
 from __future__ import annotations
 
-import os
 import threading
 from typing import Callable
 
@@ -58,20 +58,17 @@ from pasgal_spark.plans.lineage import fast_pin, pin
 # Measured r6 (157k edges, 8 supersteps): shuffle_hash 3.7 s vs
 # edge-broadcast 6.1 s vs sort-merge-hint 4.5 s. ``shuffle_hash`` builds
 # the hash map from the per-partition slice of the SMALL state side
-# (spillable in Spark 3.2+); set SPARK_GRAFT_STATE_JOIN_HINT=merge for
-# strict sort-merge, or "none" to let Catalyst/AQE choose.
-STATE_JOIN_HINT = os.environ.get("SPARK_GRAFT_STATE_JOIN_HINT", "shuffle_hash")
+# (spillable in Spark 3.2+).
+STATE_JOIN_HINT = "shuffle_hash"
 
 
 def _hint_state(df: DataFrame) -> DataFrame:
-    """Apply the configured join-strategy hint to a state/frontier side.
+    """Apply ``STATE_JOIN_HINT`` to a state/frontier side.
 
     Only meaningful when the other (edge) side is the ingest-partitioned
     cached table; kernels joining against derived/shrunken edge sets skip
     it and let AQE decide."""
-    if STATE_JOIN_HINT in ("shuffle_hash", "merge"):
-        return df.hint(STATE_JOIN_HINT)
-    return df
+    return df.hint(STATE_JOIN_HINT)
 
 
 def _compile_overlapped(action, compile_thunk):
@@ -213,33 +210,6 @@ class _StateChain:
         self._live = []
 
 
-def salted_sum(
-    df: DataFrame, key: str, value: str, out: str, buckets: int = 8
-) -> DataFrame:
-    """Two-stage sum: partial per (key, salt) then final per key.
-
-    Explicit skew taming for power-law hub keys. The salt spreads rows of
-    one hot key over ``buckets`` reducers; the reference gets the same
-    effect from per-worker local queues + atomic write_add
-    (src/BFS/bfs.h:121-132, src/utils.h:45-63).
-
-    MEASURED (BASELINE.md): for *algebraic* aggregates Spark's hash
-    aggregation already partial-aggregates map-side, so each reducer
-    receives at most one row per (map partition, key) — hub keys are
-    already tamed, and the salted variant's extra shuffle costs ~3x
-    (32.8s vs 15.5s for 6 PageRank supersteps on 3M edges). Use this only
-    for non-combinable aggregates (collect_list/set, exact quantiles) or
-    under aggregation modes that disable partial combine; PageRank and
-    friends default to the plain aggregate (salt_buckets=0).
-    """
-    partial = (
-        df.withColumn("_salt", F.spark_partition_id() % buckets)
-        .groupBy(key, "_salt")
-        .agg(F.sum(value).alias("_psum"))
-    )
-    return partial.groupBy(key).agg(F.sum("_psum").alias(out))
-
-
 # ---------------------------------------------------------------------------
 # PageRank (target kernel)
 # ---------------------------------------------------------------------------
@@ -255,7 +225,6 @@ def pagerank(
     # between eager checkpoints are shallow InMemoryRelation reads; 4
     # balances lineage truncation against one materialize job per cycle.
     checkpoint_every: int = 4,
-    salt_buckets: int = 0,  # 0 = plain agg (map-side combine); see salted_sum
     on_superstep: Callable[[int, float], None] | None = None,
 ) -> DataFrame:
     """PageRank with dangling-mass redistribution.
@@ -301,7 +270,7 @@ def pagerank(
         return _pagerank_iterations(
             edges, state, chain,
             n=n, damping=damping, iterations=iterations,
-            has_dangling=has_dangling, salt_buckets=salt_buckets,
+            has_dangling=has_dangling,
             on_superstep=on_superstep,
         )
     finally:
@@ -317,7 +286,6 @@ def _pagerank_iterations(
     damping: float,
     iterations: int,
     has_dangling: bool,
-    salt_buckets: int,
     on_superstep: Callable[[int, float], None] | None,
 ) -> DataFrame:
     """Fixed-iteration PageRank superstep loop (deterministic,
@@ -330,10 +298,7 @@ def _pagerank_iterations(
             edges.join(s, edges.src == s.id)
             .select(edges.dst.alias("id"), (F.col("rank") / F.col("out_deg")).alias("c"))
         )
-        if salt_buckets:
-            sums = salted_sum(contribs, "id", "c", "contrib", salt_buckets)
-        else:
-            sums = contribs.groupBy("id").agg(F.sum("c").alias("contrib"))
+        sums = contribs.groupBy("id").agg(F.sum("c").alias("contrib"))
         # The superstep rebuilds every vertex row anyway, so join against the
         # *previous state* (not the static base) and carry the old rank as a
         # column — the convergence delta then costs one aggregate over the
@@ -631,19 +596,21 @@ def connected_components_two_phase(
     result, because phase 2 finishes connectivity exactly from ANY
     labeling whose residual fits the budget.
 
-    Budget probe (r6 second wave, = ``connected_components_auto``'s fast
-    path): when the deduped pair count provably fits the driver budget
-    (m <= 2*max_residual for a symmetric edge table), the shrink rounds
-    are pure overhead — phase 2 runs directly over identity labels
-    (labels identical by the canonical-min-id contract, pinned by
-    test_connected_components_auto_matches_two_phase; ``on_round`` never
-    fires because no distributed round ran). Past the budget the fixed
-    shrink supersteps engage unchanged — that is the 100 TB path.
-    ``m_upper``: caller-known bound on ``sym.count()``, skips the probe.
-    Precondition of the direct path (held by every engine caller): edge
-    endpoints ⊆ ``vertices``.
+    Budget probe (r6 second wave): when the deduped pair count provably
+    fits the driver budget (m <= 2*max_residual for a symmetric edge
+    table), the shrink rounds are pure overhead — phase 2 runs directly
+    over identity labels (labels identical by the canonical-min-id
+    contract, pinned by the two-phase tests in tests/test_kernels.py;
+    ``on_round`` never fires because no distributed round ran). Past the
+    budget the fixed shrink supersteps engage unchanged — that is the
+    100 TB path. ``m_upper``: a caller-known upper bound on
+    ``sym.count()`` (e.g. the pre-filter edge count for a filtered
+    subgraph); it skips the probe job when it already fits the budget,
+    and otherwise the exact count is probed, since a filtered subgraph
+    may still fit. Precondition of the direct path (held by every engine
+    caller): edge endpoints ⊆ ``vertices``.
     """
-    if m_upper is None:
+    if m_upper is None or m_upper > 2 * max_residual:
         m_upper = sym.count()
     if m_upper <= 2 * max_residual:
         identity = vertices.select("id", vertices.id.alias("component"))
@@ -692,40 +659,6 @@ def connected_components_two_phase(
     return cc_phase2_union_find(
         sym, labels, max_residual=max_residual,
         context=f"after {shrink_rounds} shrink rounds",
-    )
-
-
-def connected_components_auto(
-    sym: DataFrame,
-    vertices: DataFrame,
-    *,
-    max_residual: int = 4_000_000,
-    m_upper: int | None = None,
-) -> DataFrame:
-    """Exact CC choosing the physical strategy from ONE edge-count probe:
-    when the deduped pair count provably fits the driver budget
-    (m <= 2 * max_residual for a symmetric edge table) skip the shrink
-    supersteps entirely and run the budgeted driver union-find directly
-    over identity labels — ``cc_phase2_union_find``'s own shape with zero
-    distributed rounds. Past the budget, the two-phase path (fixed shrink
-    supersteps + driver residual) engages unchanged: that is the 100 TB
-    path, this is the small-graph job-count path. Labels are canonical min-ids
-    either way (identical to ``connected_components_two_phase``).
-
-    ``m_upper``: a caller-known upper bound on ``sym.count()`` (e.g. the
-    pre-filter edge count for a filtered subgraph) — skips the probe job
-    when the bound already fits the budget (r6)."""
-    if m_upper is None or m_upper > 2 * max_residual:
-        m_upper = sym.count()
-    if m_upper <= 2 * max_residual:
-        identity = vertices.select("id", vertices.id.alias("component"))
-        return cc_phase2_union_find(
-            sym, identity, max_residual=max_residual,
-            context="(auto: direct driver union-find)",
-            identity_labels=True,
-        )
-    return connected_components_two_phase(
-        sym, vertices, max_residual=max_residual, m_upper=m_upper
     )
 
 

@@ -34,7 +34,7 @@ from pyspark.sql import functions as F
 
 from pasgal_spark.plans.lineage import pin
 
-from pasgal_spark.graph.kernels import cc_phase2_union_find, salted_sum
+from pasgal_spark.graph.kernels import cc_phase2_union_find
 
 
 @dataclass
@@ -94,7 +94,6 @@ class CheckpointedPageRank:
         run_id: str = "pagerank",
         damping: float = 0.85,
         checkpoint_every: int = 5,
-        salt_buckets: int = 0,  # see kernels.salted_sum: plain agg is faster
     ) -> None:
         self.spark = spark
         self.edges = edges
@@ -102,7 +101,6 @@ class CheckpointedPageRank:
         self.run_id = run_id
         self.damping = damping
         self.checkpoint_every = checkpoint_every
-        self.salt_buckets = salt_buckets
 
         self.n = vertices.count()
         deg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("out_deg"))
@@ -138,10 +136,7 @@ class CheckpointedPageRank:
                 (F.col("rank") / F.col("out_deg")).alias("c"),
             )
         )
-        if self.salt_buckets:
-            sums = salted_sum(contribs, "id", "c", "contrib", self.salt_buckets)
-        else:
-            sums = contribs.groupBy("id").agg(F.sum("c").alias("contrib"))
+        sums = contribs.groupBy("id").agg(F.sum("c").alias("contrib"))
         new_rank = (
             F.lit((1.0 - self.damping) / self.n)
             + F.lit(self.damping)

@@ -39,6 +39,7 @@ from pyspark.sql import DataFrame
 
 _log = logging.getLogger(__name__)
 _warned_fallback = False
+_warned_fast_pin = False
 
 
 def fast_pin(df: DataFrame) -> DataFrame:
@@ -64,6 +65,7 @@ def fast_pin(df: DataFrame) -> DataFrame:
     ``pin`` truncates it, so iterative kernels still pin every
     ``checkpoint_every`` generations (the _StateChain cadence).
     """
+    global _warned_fast_pin
     try:
         jdf = df._jdf  # type: ignore[attr-defined]
         jrdd = jdf.queryExecution().toRdd()
@@ -72,6 +74,14 @@ def fast_pin(df: DataFrame) -> DataFrame:
         fresh = jss.internalCreateDataFrame(jrdd, jschema, False)
         return DataFrame(fresh, df.sparkSession)
     except Exception:  # pragma: no cover - non-classic sessions (Connect)
+        if not _warned_fast_pin:
+            _warned_fast_pin = True
+            _log.warning(
+                "fast_pin: LogicalRDD rebind unavailable (non-classic "
+                "session?); returning the plan unchanged — iterative plans "
+                "keep their full logical tree between pins "
+                "(see plans/lineage.py fast_pin docstring)"
+            )
         return df
 
 

@@ -21,7 +21,7 @@ def _sym_pairs(pairs):
     return sorted(s)
 
 
-def _spark_edge_groups(spark, n, pairs, strategy="level"):
+def _spark_edge_groups(spark, n, pairs, strategy):
     sym = edges_df(spark, _sym_pairs(pairs))
     vertices = vertices_df(spark, range(n))
     rows = bccmod.bcc_edges(sym, vertices, strategy=strategy).collect()
@@ -46,7 +46,7 @@ PATH = [(i, i + 1) for i in range(6)]
 THETA = [(0, 1), (1, 2), (2, 5), (0, 3), (3, 5), (0, 4), (4, 5)]
 
 
-@pytest.mark.parametrize("strategy", ["level", "euler"])
+@pytest.mark.parametrize("strategy", ["euler"])
 @pytest.mark.parametrize(
     "pairs,n",
     [(FIG8, 8), (CHORD, 5), (PATH, 7), (THETA, 6)],
@@ -58,7 +58,7 @@ def test_bcc_edge_partition_matches_hopcroft_tarjan(spark, pairs, n, strategy):
     assert got == want
 
 
-@pytest.mark.parametrize("strategy", ["level", "euler"])
+@pytest.mark.parametrize("strategy", ["euler"])
 def test_bcc_random_graph_matches_oracle(spark, strategy):
     # Deterministic hash-derived graph (the reference's synthetic idiom,
     # src/graph.h:397-433): ~2n edges over n=40 vertices, plus a guaranteed
@@ -88,8 +88,8 @@ def _long_diameter_pairs():
 
 
 def test_bcc_euler_long_diameter_matches_oracle(spark):
-    """The level-sweep path would need ~diameter supersteps here; the
-    euler strategy (Borůvka + list ranking + sparse table) stays
+    """A BFS-tree level sweep would need ~diameter supersteps here; the
+    euler pipeline (Borůvka + list ranking + sparse table) stays
     O(log n) and must still match Hopcroft-Tarjan exactly."""
     n, pairs = _long_diameter_pairs()
     got = _spark_edge_groups(spark, n, pairs, "euler")
@@ -97,38 +97,23 @@ def test_bcc_euler_long_diameter_matches_oracle(spark):
     assert got == want
 
 
-def test_spanning_tree_raises_instead_of_truncating(spark):
-    """No silent-partial path: a component deeper than max_depth must
-    raise (the scc budget idiom), never return a truncated tree."""
-    pairs = [(i, i + 1) for i in range(30)]
-    sym = edges_df(spark, _sym_pairs(pairs))
-    vertices = vertices_df(spark, range(31))
-    from pasgal_spark.graph.kernels import connected_components_two_phase
-
-    cc = connected_components_two_phase(sym, vertices)
-    with pytest.raises(RuntimeError, match="depth budget"):
-        bccmod.spanning_tree(sym, vertices, cc, max_depth=10)
-
-
 def test_bcc_edges_canonical_labels_are_min_edge_keys(spark):
-    """Canonical per-edge labels: every cluster's label equals the min
-    normalized edge key in the cluster, and level/euler strategies agree
-    exactly (tree-independence of the canonical form)."""
+    """Canonical per-edge labels: every cluster's label is the min
+    normalized edge key in the cluster, so the output equals the
+    Hopcroft-Tarjan partition canonicalized the same way (the labels do
+    not depend on the spanning tree)."""
     n = 8
     sym = edges_df(spark, _sym_pairs(FIG8))
     vertices = vertices_df(spark, range(n))
-    lvl = {
-        (r["src"], r["dst"]): r["bcc"]
-        for r in bccmod.bcc_edges_canonical(sym, vertices, strategy="level").collect()
-    }
-    eul = {
+    got = {
         (r["src"], r["dst"]): r["bcc"]
         for r in bccmod.bcc_edges_canonical(sym, vertices, strategy="euler").collect()
     }
-    assert lvl == eul
-    for (s, d), lbl in lvl.items():
-        keys = [s2 * 2**32 + d2 for (s2, d2), l2 in lvl.items() if l2 == lbl]
-        assert lbl == min(keys)
+    want = {}
+    for grp in bcc_oracle(n, FIG8):
+        label = min(s * 2**32 + d for s, d in grp)
+        want.update((e, label) for e in grp)
+    assert got == want
 
 
 def test_bcc_vertex_labels_cover_all_vertices(spark):
@@ -169,40 +154,23 @@ def test_articulation_points_match_oracle(spark):
 
 
 def test_bcc_summary_counts(spark):
+    """The row matches the oracle on the driver path and the distributed
+    path (max_driver_edges=0), also when sym repeats rows (one direction
+    of a triangle edge, both directions of the 4-5 bridge): both paths
+    read sym as a simple graph."""
     n = 8
-    sym = edges_df(spark, _sym_pairs(FIG8))
     vertices = vertices_df(spark, range(n))
-    row = bccmod.bcc_summary(sym, vertices).first()
     want = bcc_oracle(n, FIG8)
-    assert row["n_bcc"] == len(want)
-    assert row["largest_bcc_edges"] == max(len(g) for g in want)
-    assert row["n_bridges"] == sum(1 for g in want if len(g) == 1)
-    assert row["n_cc"] == 2  # {0..6} and {7}
-
-
-def test_relabeled_forest_is_dense_per_tree(spark):
-    """Forest output form (reference src/graph.h:436-443): local ids are a
-    dense 0-based preorder per tree with the root at 0, and every child's
-    local parent is a valid local id of the same tree."""
-    from pasgal_spark.graph.kernels import connected_components_two_phase
-
-    n = 8
-    sym = edges_df(spark, _sym_pairs(FIG8))
-    vertices = vertices_df(spark, range(n))
-    cc = connected_components_two_phase(sym, vertices)
-    tree = bccmod.spanning_tree(sym, vertices, cc)
-    tags = bccmod.tree_tags(tree, sym)
-    rows = bccmod.relabeled_forest(tree, tags).collect()
-    by_comp = {}
-    for r in rows:
-        by_comp.setdefault(r["component"], []).append(r)
-    for comp, rs in by_comp.items():
-        ids = sorted(r["local_id"] for r in rs)
-        assert ids == list(range(len(rs)))  # dense 0-based
-        roots = [r for r in rs if r["id"] == comp]
-        assert len(roots) == 1 and roots[0]["local_id"] == 0
-        valid = set(ids)
-        assert all(r["local_parent"] in valid for r in rs)
+    clean = _sym_pairs(FIG8)
+    for pairs in (clean, clean + [(0, 2), (4, 5), (5, 4)]):
+        sym = edges_df(spark, pairs)
+        for budget in (None, 0):
+            row = bccmod.bcc_summary(sym, vertices, max_driver_edges=budget).first()
+            case = (len(pairs), budget)
+            assert row["n_bcc"] == len(want), case
+            assert row["largest_bcc_edges"] == max(len(g) for g in want), case
+            assert row["n_bridges"] == sum(1 for g in want if len(g) == 1), case
+            assert row["n_cc"] == 2, case  # {0..6} and {7}
 
 
 # -- r5 hybrid driver/distributed path differentials -------------------------
@@ -273,37 +241,38 @@ def test_euler_stage_driver_paths_match_distributed(spark):
     assert mm_dist.exceptAll(mm_np).count() == 0
 
 
-def test_connected_components_auto_matches_two_phase(spark):
-    from pasgal_spark.graph import kernels
-
-    pairs, n = _random_graph(4, 100, 130)
-    sym = edges_df(spark, _sym_pairs(pairs))
-    vertices = vertices_df(spark, range(n))
-    want = kernels.connected_components_two_phase(sym, vertices)
-    # driver path and the exact-budget boundary (probe-first rule:
-    # a residual exactly at the budget must succeed, not raise)
-    got_auto = kernels.connected_components_auto(sym, vertices)
-    n_pairs = sym.count() // 2
-    got_edge = kernels.connected_components_auto(
-        sym, vertices, max_residual=n_pairs
-    )
-    for got in (got_auto, got_edge):
-        assert got.exceptAll(want).count() == 0
-        assert want.exceptAll(got).count() == 0
-
-
 def test_bcc_summary_driver_matches_distributed(spark):
     """The r6 driver fast path for bcc_summary (one collect + sequential
     Hopcroft-Tarjan) must produce the identical row to the distributed
-    machinery (max_driver_edges=0 forces it) under both strategies — the
-    summary's counts are graph invariants."""
+    machinery (max_driver_edges=0 forces it) — the summary's counts are
+    graph invariants."""
     for seed in (11, 12):
         pairs, n = _random_graph(seed, 120, 160)
         sym = edges_df(spark, _sym_pairs(pairs))
         vertices = vertices_df(spark, range(n))
         fast = bccmod.bcc_summary(sym, vertices).first()
-        for strategy in ("level", "euler"):
-            dist = bccmod.bcc_summary(
-                sym, vertices, strategy=strategy, max_driver_edges=0
-            ).first()
-            assert tuple(fast) == tuple(dist), f"seed {seed} {strategy}"
+        dist = bccmod.bcc_summary(sym, vertices, max_driver_edges=0).first()
+        assert tuple(fast) == tuple(dist), f"seed {seed}"
+
+
+@pytest.mark.parametrize("strategy", ["level", "bogus"])
+def test_bcc_strategy_rejected_on_both_paths(spark, strategy):
+    """euler is the only strategy: any other value raises ValueError on
+    the driver path and the distributed path alike, and from every
+    public call that takes the keyword."""
+    sym = edges_df(spark, _sym_pairs(FIG8))
+    vertices = vertices_df(spark, range(8))
+    for budget in (None, 0):
+        with pytest.raises(ValueError, match="strategy"):
+            bccmod.bcc_summary(
+                sym, vertices, strategy=strategy, max_driver_edges=budget
+            )
+    for fn in (
+        bccmod.bcc,
+        bccmod.bcc_edges,
+        bccmod.bcc_edges_canonical,
+        bccmod.articulation_points,
+        bccmod.tarjan_vishkin_bcc_edges,
+    ):
+        with pytest.raises(ValueError, match="strategy"):
+            fn(sym, vertices, strategy=strategy)

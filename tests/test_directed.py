@@ -1,15 +1,11 @@
-"""Directed kernels (reachability / multi-reach / SCC / spanning forest)
-and the Arrow CSR-block PageRank variant."""
+"""Directed kernels (reachability / multi-reach / SCC / spanning forest)."""
 
 from __future__ import annotations
 
-import math
 from collections import defaultdict
 
 from pasgal_spark.graph import directed, kernels
-from pasgal_spark.graph.arrow_kernels import pagerank_arrow
 from tests.conftest import edges_df, vertices_df
-from tests.oracles import pagerank_oracle
 
 # digraph: cycle {0,1,2}, cycle {3,4}, chain 2->3, 5 isolated, 6->0
 DI_EDGES = [(0, 1), (1, 2), (2, 0), (3, 4), (4, 3), (2, 3), (6, 0)]
@@ -98,17 +94,6 @@ def test_spanning_forest_long_diameter_chain(spark):
         assert r["component"] == 0
 
 
-def test_pagerank_arrow_matches_dataframe_kernel(spark):
-    edges = edges_df(spark, DI_EDGES)
-    verts = vertices_df(spark, range(DI_N))
-    a = dict(pagerank_arrow(edges, verts, iterations=12).collect())
-    b = dict(kernels.pagerank(edges, verts, iterations=12).collect())
-    exp = pagerank_oracle(DI_N, DI_EDGES, iters=12)
-    for u in range(DI_N):
-        assert math.isclose(a[u], b[u], abs_tol=1e-9)
-        assert math.isclose(a[u], exp[u], abs_tol=1e-9)
-
-
 def _chain_of_cycles(k: int, size: int = 3):
     """k directed `size`-cycles linked in a chain: the coloring algorithm's
     pathological topology (one SCC settles per phase)."""
@@ -158,17 +143,6 @@ def test_scc_dag_settles_via_trim(spark):
     )
     assert got == {i: i for i in range(8)}
     assert all(kind == "trim" for kind, _ in rounds), rounds
-
-
-def test_pagerank_blocked_matches_dataframe_kernel(spark):
-    from pasgal_spark.graph.arrow_kernels import pagerank_blocked
-
-    edges = edges_df(spark, DI_EDGES)
-    verts = vertices_df(spark, range(DI_N))
-    a = dict(pagerank_blocked(edges, verts, iterations=12).collect())
-    b = dict(kernels.pagerank(edges, verts, iterations=12).collect())
-    for u in range(DI_N):
-        assert math.isclose(a[u], b[u], abs_tol=1e-9)
 
 
 def test_min_label_raises_on_budget_exhaustion(spark):

@@ -6,8 +6,6 @@ from __future__ import annotations
 
 import math
 
-from pyspark.sql import functions as F
-
 from pasgal_spark.graph import kernels
 from pasgal_spark.graph.builder import symmetrize, transpose, validate
 from tests.conftest import edges_df, vertices_df
@@ -230,22 +228,6 @@ def test_validate_flags_violations(spark):
     assert v == {"out_of_range": 1, "self_loops": 1, "dups": 1}
 
 
-def test_salted_sum_equals_plain_sum(spark):
-    df = spark.createDataFrame(
-        [(i % 3, float(i)) for i in range(100)], "k long, v double"
-    )
-    got = {
-        r["k"]: r["s"]
-        for r in kernels.salted_sum(df, "k", "v", "s", buckets=4).collect()
-    }
-    exp = {
-        r["k"]: r["s"]
-        for r in df.groupBy("k").agg(F.sum("v").alias("s")).collect()
-    }
-    assert got.keys() == exp.keys()
-    assert all(math.isclose(got[k], exp[k], rel_tol=1e-12) for k in got)
-
-
 def test_two_phase_cc_matches_fixpoint_loop_on_long_diameter_grid(spark):
     """Reference two-phase connectivity (src/BCC/connectivity.h:44-107):
     exact same labels as the fixpoint loop, in a constant number of
@@ -275,9 +257,12 @@ def test_two_phase_cc_matches_fixpoint_loop_on_long_diameter_grid(spark):
     # constant supersteps vs diameter-driven loop: >= 3x fewer
     assert len(new_rounds) == 2
     assert len(old_rounds) >= 3 * len(new_rounds)
-    # and the budget fast path (no distributed rounds) is label-identical
-    fast = kernels.connected_components_two_phase(sym, vertices)
-    assert sorted(map(tuple, fast.collect())) == sorted(map(tuple, new.collect()))
+    # and the budget fast path (no distributed rounds) is label-identical,
+    # also with a residual exactly at the budget (must succeed, not raise)
+    n_pairs = sym.count() // 2
+    for budget in ({}, {"max_residual": n_pairs}):
+        fast = kernels.connected_components_two_phase(sym, vertices, **budget)
+        assert sorted(map(tuple, fast.collect())) == sorted(map(tuple, new.collect()))
 
 
 def test_two_phase_cc_matches_on_canonical_graph(spark, sf_dir):

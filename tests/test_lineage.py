@@ -9,9 +9,12 @@ adaptive root reports UnknownPartitioning at checkpoint time.
 
 from __future__ import annotations
 
+import logging
+
 import pytest
 from pyspark.sql import functions as F
 
+from pasgal_spark.plans import lineage
 from pasgal_spark.plans.lineage import pin
 from tests.conftest import edges_df
 
@@ -78,3 +81,14 @@ def test_pin_under_aqe_checkpoint_captures_unknown(spark):
     bare = df.localCheckpoint(eager=True)
     part = _analyzed(bare).outputPartitioning().toString()
     assert "UnknownPartitioning" in part, part
+
+
+def test_fast_pin_fallback_warns_once(monkeypatch, caplog):
+    """A frame fast_pin cannot rebind (no classic ``_jdf``) comes back
+    unchanged, with one warning per process rather than silently."""
+    monkeypatch.setattr(lineage, "_warned_fast_pin", False)
+    not_classic = object()
+    with caplog.at_level(logging.WARNING, logger=lineage.__name__):
+        assert lineage.fast_pin(not_classic) is not_classic
+        assert lineage.fast_pin(not_classic) is not_classic
+    assert sum("fast_pin" in r.getMessage() for r in caplog.records) == 1

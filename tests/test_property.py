@@ -208,18 +208,17 @@ def test_prop_spanning_forest_is_valid(spark, g):
     max_examples=4, deadline=None, derandomize=True,
     suppress_health_check=[HealthCheck.too_slow],
 )
-def test_prop_bcc_both_strategies_match_hopcroft_tarjan(spark, g):
+def test_prop_bcc_matches_hopcroft_tarjan(spark, g):
     n, base, sym = g
     want = bcc_oracle(n, base)
-    sym_df = edges_df(spark, sym)
-    verts = vertices_df(spark, range(n))
-    for strategy in ("level", "euler"):
-        rows = bcc.bcc_edges(sym_df, verts, strategy=strategy).collect()
-        groups = {}
-        for r in rows:
-            groups.setdefault(r["bcc"], set()).add((r["src"], r["dst"]))
-        got = set(frozenset(grp) for grp in groups.values())
-        assert got == want, strategy
+    rows = bcc.bcc_edges(
+        edges_df(spark, sym), vertices_df(spark, range(n)), strategy="euler"
+    ).collect()
+    groups = {}
+    for r in rows:
+        groups.setdefault(r["bcc"], set()).add((r["src"], r["dst"]))
+    got = set(frozenset(grp) for grp in groups.values())
+    assert got == want
 
 
 @given(g=graphs())
